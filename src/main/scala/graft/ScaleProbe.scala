@@ -289,7 +289,7 @@ object ScaleProbe {
           val commitS = (System.nanoTime() - t0) / 1e9
           val jsonBytes = Files.size(Paths.get(
             s"$wh/probe/_commits/commit-${t.currentVersion}.json"))
-          val chunkRefs = t.commits.last.manifestsOrEmpty.size
+          val chunkRefs = t.commits.last.manifests.size
           // the ASSEMBLY check (r15 missing #3 → r16 fast path): a
           // 1-file append on a WARM handle isolates the driver-side
           // commit cost — Spark's write of one file is a constant, so
@@ -304,16 +304,14 @@ object ScaleProbe {
           }
           spark.conf.set("spark.sql.shuffle.partitions", "512")
           val tinyS = tinyTimes.sorted.apply(1) // median of 3
-          val probes0 = GraftTable.footerProbeCount.get()
           val lo = ev.agg(min(col("ts"))).collect().head.getTimestamp(0).getTime * 1000L
           val t1 = System.nanoTime()
           val pruned = t.readRangeLogical("ts", lo, lo + 3L * 86400000000L).count()
           val wm = t.columnMaxMicros("ts")
           val readS = (System.nanoTime() - t1) / 1e9
-          val probes = GraftTable.footerProbeCount.get() - probes0
           println(f"  append_commit        $commitS%8.2f s  json=${jsonBytes}B refs=$chunkRefs")
           println(f"  tiny_append_warm     $tinyS%8.2f s  (median of 3; 1-file delta — assembly cost)")
-          println(f"  pruned_read+wm       $readS%8.2f s  rows=$pruned wm=${wm.isDefined} footer_probes=$probes")
+          println(f"  pruned_read+wm       $readS%8.2f s  rows=$pruned wm=${wm.isDefined}")
         }
       } finally {
         spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)

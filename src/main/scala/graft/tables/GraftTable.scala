@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   * cost stays flat as the live file count grows (Iceberg's
   * manifest-list design; the reference's tables are all Iceberg
   * format-version 2). [[GraftTable.commits]] resolves chunk references
-  * back into the full in-memory view once per handle. Pre-manifest
-  * commit jsons (inline `files`/`fileRows`/`fileSpecs`, no `manifests`)
-  * still read; the next commit migrates their entries into chunks.
+  * back into the full in-memory view once per handle. The writer
+  * serializes every field, so no collection field is ever null; a json
+  * without `manifests` is the unsupported pre-manifest format, which
+  * [[GraftTable.commits]] refuses.
   */
 final case class CommitMeta(
     version: Int,
@@ -31,24 +32,83 @@ final case class CommitMeta(
     op: String,
     rowCount: Long,
     files: Seq[String],
+    /** sink id → last micro-batch committed by that sink, carried on
+      * every commit so the latest one is always authoritative.
+      */
     @JsonDeserialize(contentAs = classOf[java.lang.Long])
     sinkBatches: Map[String, Long] = Map.empty,
+    /** Per-file row counts (Iceberg's manifest `record_count` analog) —
+      * carried commit to commit so a replace/compact commit re-reads
+      * footers only for files it ADDED, never the carried-over live set:
+      * commit metadata cost stays O(new files), not O(table).
+      */
     @JsonDeserialize(contentAs = classOf[java.lang.Long])
     fileRows: Map[String, Long] = Map.empty,
+    /** For a copy-on-write upsert commit: the subset of this commit's
+      * files holding EXACTLY the upserted batch (the survivors were
+      * rewritten into separate files), i.e. the commit's logical change
+      * set — Iceberg's changelog scan derives the same rows from the
+      * equality-delete files a v2 MERGE writes. Empty on every other op
+      * and on `upsert(..., trackChanges = false)` commits (whose change
+      * set is unknowable — readChanges refuses those, see
+      * fileDeltasSince).
+      */
     changeFiles: Seq[String] = Nil,
+    /** For a change-tracked replace commit (`replace-cdc`): files holding
+      * EXACTLY the rows the commit removed — the engine's analog of
+      * Iceberg v2's delete files, written only when the caller opted into
+      * change tracking (the extra O(deleted) write is a real cost the
+      * default repair path must not pay). NOT part of the live file set;
+      * referenced by the commit so orphan cleanup spares them until the
+      * commit itself expires.
+      */
     deleteFiles: Seq[String] = Nil,
     schemaDdl: String = null,
+    /** PENDING equality-delete files of a merge-on-read table (Iceberg
+      * v2's delete files): key-tuple tombstones → the version that wrote
+      * each, killing matching rows from OLDER sequences until a later
+      * upsert resurrects the key. Carried forward commit to commit (like
+      * sinkBatches) so the latest commit always knows the active
+      * tombstone set; compaction materializes them away and clears the
+      * map. Distinct from `deleteFiles`, which is a change-tracked
+      * repair's one-shot changelog payload, never carried.
+      */
     @JsonDeserialize(contentAs = classOf[java.lang.Integer])
     morDeleteFiles: Map[String, Int] = Map.empty,
     partSpecDdl: String = null,
+    /** file → the spec it was WRITTEN under. Recorded (for every live
+      * file) only once the table has ever evolved its partitioning; an
+      * empty map means every file is on the declared spec. Explicit
+      * per-file provenance — a derived first-seen lookup would silently
+      * mis-group files after snapshot expiry, and a mis-grouped file
+      * reads the wrong directory layout.
+      */
     fileSpecs: Map[String, String] = Map.empty,
+    /** Column-RENAME log as of this commit, carried forward like
+      * schemaDdl: each entry `"<version>|<old>|<new>"` records that the
+      * evolve commit at `version` renamed `old` to `new`. Files written
+      * BEFORE that version store the old name; the read path derives
+      * each file's stored names from its first-seen version against this
+      * log — the engine's stand-in for Iceberg's field ids, which is
+      * what makes RENAME a metadata-only commit on a name-resolved
+      * parquet format (zero footers rewritten).
+      */
     renames: Seq[String] = Nil,
+    /** PENDING position-delete files (Iceberg v2's `(file, pos)` delete
+      * kind — the shape `DELETE FROM ... WHERE <non-key predicate>`
+      * writes): parquet files of (data-file relative path, row index)
+      * tombstones → the version that wrote each, anti-joined away by
+      * every logical read until [[GraftTable.compact]] materializes them.
+      * Carried forward like morDeleteFiles; never part of the live file
+      * set. Only non-merge-on-read tables carry these (a MOR predicate
+      * delete delegates to equality deletes — see deleteWhere).
+      */
     @JsonDeserialize(contentAs = classOf[java.lang.Integer])
     posDeleteFiles: Map[String, Int] = Map.empty,
+    /** Names of the manifest chunks whose entries form this snapshot's
+      * live file set (the durable file list — see the class doc).
+      */
     manifests: Seq[String] = Nil) {
-  /** Jackson leaves a missing field null on old commit jsons. */
-  def sinkBatchesOrEmpty: Map[String, Long] =
-    Option(sinkBatches).getOrElse(Map.empty)
 
   /** The table's LOGICAL schema as of this commit (Iceberg pins a
     * schema-id per snapshot the same way). Carried forward on every
@@ -58,93 +118,11 @@ final case class CommitMeta(
     */
   def schemaDdlOrNone: Option[String] = Option(schemaDdl)
 
-  /** For a copy-on-write upsert commit: the subset of this commit's
-    * files holding EXACTLY the upserted batch (the survivors were
-    * rewritten into separate files), i.e. the commit's logical change
-    * set — Iceberg's changelog scan derives the same rows from the
-    * equality-delete files a v2 MERGE writes. Empty on every other op
-    * and on pre-upgrade upsert jsons (whose change set is unknowable —
-    * readChanges refuses those, see fileDeltasSince).
-    */
-  def changeFilesOrEmpty: Seq[String] =
-    Option(changeFiles).getOrElse(Nil)
-
-  /** For a change-tracked replace commit (`replace-cdc`): files holding
-    * EXACTLY the rows the commit removed — the engine's analog of
-    * Iceberg v2's delete files, written only when the caller opted into
-    * change tracking (the extra O(deleted) write is a real cost the
-    * default repair path must not pay). NOT part of the live file set;
-    * referenced by the commit so orphan cleanup spares them until the
-    * commit itself expires.
-    */
-  def deleteFilesOrEmpty: Seq[String] =
-    Option(deleteFiles).getOrElse(Nil)
-
-  /** Per-file row counts (Iceberg's manifest `record_count` analog) —
-    * carried commit to commit so a replace/compact commit re-reads
-    * footers only for files it ADDED, never the carried-over live set:
-    * commit metadata cost stays O(new files), not O(table). Missing on
-    * pre-upgrade commit jsons → the next commit rebuilds it once.
-    */
-  def fileRowsOrEmpty: Map[String, Long] =
-    Option(fileRows).getOrElse(Map.empty)
-
-  /** PENDING equality-delete files of a merge-on-read table (Iceberg
-    * v2's delete files): key-tuple tombstones → the version that wrote
-    * each, killing matching rows from OLDER sequences until a later
-    * upsert resurrects the key. Carried forward commit to commit (like
-    * sinkBatches) so the latest commit always knows the active
-    * tombstone set; compaction materializes them away and clears the
-    * map. Distinct from `deleteFiles`, which is a change-tracked
-    * repair's one-shot changelog payload, never carried.
-    */
-  def morDeleteFilesOrEmpty: Map[String, Int] =
-    Option(morDeleteFiles).getOrElse(Map.empty)
-
   /** The PARTITION spec in effect as of this commit (serialized
     * transform list, see [[PartitionTransform.specDdl]]) — carried like
     * schemaDdl; absent on never-evolved tables (declared spec applies).
     */
   def partSpecDdlOrNone: Option[String] = Option(partSpecDdl)
-
-  /** file → the spec it was WRITTEN under. Recorded (for every live
-    * file) only once the table has ever evolved its partitioning; an
-    * empty map means every file is on the declared spec. Explicit
-    * per-file provenance — a derived first-seen lookup would silently
-    * mis-group files after snapshot expiry, and a mis-grouped file
-    * reads the wrong directory layout.
-    */
-  def fileSpecsOrEmpty: Map[String, String] =
-    Option(fileSpecs).getOrElse(Map.empty)
-
-  /** Column-RENAME log as of this commit, carried forward like
-    * schemaDdl: each entry `"<version>|<old>|<new>"` records that the
-    * evolve commit at `version` renamed `old` to `new`. Files written
-    * BEFORE that version store the old name; the read path derives
-    * each file's stored names from its first-seen version against this
-    * log — the engine's stand-in for Iceberg's field ids, which is
-    * what makes RENAME a metadata-only commit on a name-resolved
-    * parquet format (zero footers rewritten).
-    */
-  def renamesOrEmpty: Seq[String] = Option(renames).getOrElse(Nil)
-
-  /** PENDING position-delete files (Iceberg v2's `(file, pos)` delete
-    * kind — the shape `DELETE FROM ... WHERE <non-key predicate>`
-    * writes): parquet files of (data-file relative path, row index)
-    * tombstones → the version that wrote each, anti-joined away by
-    * every logical read until [[GraftTable.compact]] materializes them.
-    * Carried forward like morDeleteFiles; never part of the live file
-    * set. Only non-merge-on-read tables carry these (a MOR predicate
-    * delete delegates to equality deletes — see deleteWhere).
-    */
-  def posDeleteFilesOrEmpty: Map[String, Int] =
-    Option(posDeleteFiles).getOrElse(Map.empty)
-
-  /** Names of the manifest chunks whose entries form this snapshot's
-    * live file set. Empty on pre-manifest commit jsons (which carry
-    * the file list inline) — see the class doc.
-    */
-  def manifestsOrEmpty: Seq[String] = Option(manifests).getOrElse(Nil)
 }
 
 /** A concurrent commit landed that this operation cannot be replayed
@@ -278,7 +256,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
   /** Partition spec as of a snapshot (latest when None): the commit's
     * carried partSpecDdl, else the declared TableDef spec. New writes
     * always use the CURRENT spec; existing files keep the layout they
-    * were written under ([[CommitMeta.fileSpecsOrEmpty]]).
+    * were written under ([[CommitMeta.fileSpecs]]).
     */
   def partitionsAt(version: Option[Int]): Seq[PartitionTransform] = {
     val cs = commits
@@ -300,7 +278,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   /** The spec each of a snapshot's files was written under. */
   private def specsByFile(snap: CommitMeta): Map[String, Seq[PartitionTransform]] = {
-    val m = snap.fileSpecsOrEmpty
+    val m = snap.fileSpecs
     if (m.isEmpty) Map.empty.withDefaultValue(defn.partitions)
     else m.view.mapValues(PartitionTransform.parseSpec).toMap
       .withDefaultValue(defn.partitions)
@@ -319,7 +297,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     *    snapshot expiry so a later re-add is detected as prone.
     */
   private def renameLogOf(snap: Option[CommitMeta]): Seq[(Int, String, String)] =
-    snap.map(_.renamesOrEmpty).getOrElse(Nil).map { s =>
+    snap.map(_.renames).getOrElse(Nil).map { s =>
       val parts = s.split("\\|", -1)
       require(parts.length == 3, s"${defn.name}: bad rename log entry '$s'")
       (parts(0).toInt, parts(1), parts(2))
@@ -436,33 +414,40 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         val bytes = Files.readAllBytes(f.toPath)
         commitCache.getOrElseUpdate(
           (f.getName, bytes.length.toLong, contentKey(bytes)),
-          resolveManifests(mapper.readValue(bytes, classOf[CommitMeta])))
+          parseCommit(f, bytes))
       }
       .sortBy(_.version).toSeq
   }
 
-  /** Rebuild the in-memory full-file-list view from a persisted
-    * manifest-format commit (files/fileRows/fileSpecs were stripped at
-    * write time — see [[writeCommit]]). Cached with the parse, so the
-    * chunk walk happens once per commit json per handle; the chunk
-    * parses themselves cache in the [[ManifestStore]].
+  /** Parse one commit json into the full in-memory view. A json without
+    * `manifests` carries the pre-manifest inline format, which this
+    * reader does not support — refused loudly rather than read
+    * half-right (Jackson would fill the missing field with its default).
+    */
+  private def parseCommit(f: File, bytes: Array[Byte]): CommitMeta = {
+    val tree = mapper.readTree(bytes)
+    if (!tree.has("manifests"))
+      throw new IllegalStateException(s"${defn.name}: commit log ${f.getPath} " +
+        "has no `manifests` field — pre-manifest commit logs are unsupported")
+    resolveManifests(mapper.treeToValue(tree, classOf[CommitMeta]))
+  }
+
+  /** Rebuild the in-memory full-file-list view from a persisted commit
+    * (files/fileRows/fileSpecs were stripped at write time — see
+    * [[writeCommit]]). Cached with the parse, so the chunk walk happens
+    * once per commit json per handle; the chunk parses themselves cache
+    * in the [[ManifestStore]].
     */
   private def resolveManifests(c: CommitMeta): CommitMeta = {
-    val ms = c.manifestsOrEmpty
-    if (ms.isEmpty) c
-    else {
-      val entries = ms.flatMap(manifestStore.read)
-      c.copy(files = entries.map(_.p),
-        fileRows = entries.map(e => e.p -> e.r).toMap,
-        fileSpecs = entries.flatMap(e => e.specOrNone.map(e.p -> _)).toMap)
-    }
+    val entries = c.manifests.flatMap(manifestStore.read)
+    c.copy(files = entries.map(_.p),
+      fileRows = entries.map(e => e.p -> e.r).toMap,
+      fileSpecs = entries.flatMap(e => e.specOrNone.map(e.p -> _)).toMap)
   }
 
   /** file → write-time column bounds, from a snapshot's manifest
-    * entries — the metadata-log replacement for per-file footer probes
-    * on the range-pruning and watermark paths. Files from pre-manifest
-    * commits (or migrated entries with unknown bounds) are absent;
-    * callers fall back to a footer read for exactly those.
+    * entries — the metadata-log lookup behind the range-pruning and
+    * watermark paths (zero data-file footer IO).
     */
   // single-entry memo, NOT a map: every caller queries the latest
   // snapshot, and a per-snapshot map would retain one O(live files)
@@ -473,15 +458,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       (Seq[String], Map[String, Map[String, (Long, Long)]]) = (null, null)
 
   private def manifestBoundsOf(snap: CommitMeta): Map[String, Map[String, (Long, Long)]] = {
-    val key = snap.manifestsOrEmpty
+    val key = snap.manifests
     val memo = boundsMemo
     if (memo._1 == key) memo._2
     else {
       // rebuilding an O(live files) map per pruned read would turn
       // every range query into O(table) driver CPU
       val v = key.flatMap(manifestStore.read)
-        .flatMap(e => e.boundsOrNone.map(bs =>
-          e.p -> bs.map(cb => cb.c -> (cb.lo, cb.hi)).toMap)).toMap
+        .map(e => e.p -> e.b.map(cb => cb.c -> (cb.lo, cb.hi)).toMap).toMap
       boundsMemo = (key, v)
       v
     }
@@ -547,8 +531,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // them on read — abort rather than mis-read (the op re-runs
     // cheaply against the new metadata)
     def writeEpochGuards(): Unit = {
-      if (head.map(_.renamesOrEmpty).getOrElse(Nil) !=
-          base.map(_.renamesOrEmpty).getOrElse(Nil))
+      if (head.map(_.renames).getOrElse(Nil) !=
+          base.map(_.renames).getOrElse(Nil))
         conflict("a column rename/re-add landed concurrently")
       if (head.flatMap(_.partSpecDdlOrNone) != base.flatMap(_.partSpecDdlOrNone))
         conflict("a partition-spec evolution landed concurrently")
@@ -559,10 +543,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         writeEpochGuards()
         if (!removed.subsetOf(headFiles))
           conflict("a concurrent commit removed files this rewrite read")
-        if (head.map(_.morDeleteFilesOrEmpty).getOrElse(Map.empty) !=
-            base.map(_.morDeleteFilesOrEmpty).getOrElse(Map.empty) ||
-            head.map(_.posDeleteFilesOrEmpty).getOrElse(Map.empty) !=
-            base.map(_.posDeleteFilesOrEmpty).getOrElse(Map.empty))
+        if (head.map(_.morDeleteFiles).getOrElse(Map.empty) !=
+            base.map(_.morDeleteFiles).getOrElse(Map.empty) ||
+            head.map(_.posDeleteFiles).getOrElse(Map.empty) !=
+            base.map(_.posDeleteFiles).getOrElse(Map.empty))
           conflict("tombstones landed concurrently — this rewrite read the " +
             "base state and would silently clear them")
         if (defn.mergeOnRead &&
@@ -654,7 +638,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // same discipline for the chunk-parse cache: a long-lived
         // poll/cron writer otherwise accumulates one parsed chunk per
         // chunk ever rewritten (see ManifestStore.prune)
-        manifestStore.prune(meta._1.manifestsOrEmpty.toSet)
+        manifestStore.prune(meta._1.manifests.toSet)
         return meta._1
       }
       attempt += 1
@@ -685,9 +669,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * at a thousand (Iceberg's fast-append). Rewrites (compact, zorder,
     * replace, rollback) keep the full O(live) assembly: their intent
     * already touches the live set wholesale, and they run on the
-    * maintenance cadence, not the ingest cadence. The one-time
-    * migration of a pre-manifest predecessor also takes the full pass
-    * (its row map must be rebuilt from footers once).
+    * maintenance cadence, not the ingest cadence.
     */
   private def assembleCommit(op: String, intent: CommitIntent,
       prevMeta: Option[CommitMeta],
@@ -702,7 +684,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       posDeletes: (Map[String, Int], Int) => Map[String, Int]): (CommitMeta, CommitMeta) = {
     val newVersion = prevMeta.map(_.version).getOrElse(0) + 1
     val prevSpecDdl = prevMeta.flatMap(_.partSpecDdlOrNone)
-    val prevFileSpecs = prevMeta.map(_.fileSpecsOrEmpty).getOrElse(Map.empty)
+    val prevFileSpecs = prevMeta.map(_.fileSpecs).getOrElse(Map.empty)
     val writeSpecDdl = prevSpecDdl.getOrElse(PartitionTransform.specDdl(defn.partitions))
     // ---- O(delta) fast path (see the method doc) ----
     val fastAdds: Option[Seq[String]] = intent match {
@@ -711,11 +693,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case TombstoneEq | TombstonePos => Some(Nil)
       case _ => None
     }
-    // a pre-manifest predecessor (inline file list, possibly no row
-    // map) must migrate through the full pass once
-    val fast = fastAdds.isDefined &&
-      prevMeta.forall(p => p.manifestsOrEmpty.nonEmpty || p.files.isEmpty)
-    if (fast) {
+    if (fastAdds.isDefined) {
       val added = fastAdds.get
       // one footer open per added file: rows + bounds (cached — the
       // caller's zero-row check already primed it)
@@ -724,7 +702,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       val addedRows: Map[String, Long] =
         added.map(f => f -> knownRows.getOrElse(f, addedStats(f)._1)).toMap
       val files = prevMeta.map(_.files).getOrElse(Nil) ++ added
-      val fileRows = prevMeta.map(_.fileRowsOrEmpty).getOrElse(Map.empty) ++ addedRows
+      val fileRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ addedRows
       val rowCount = prevMeta.map(_.rowCount).getOrElse(0L) + addedRows.values.sum
       val carriedSpecDdl = prevSpecDdl.orNull
       val fileSpecs =
@@ -734,7 +712,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       // chunk carries by reference — no chunk is read, let alone
       // scanned. Only the fold-undersized merge (amortized logarithmic)
       // ever opens carried chunks here.
-      val prevChunks = prevMeta.map(_.manifestsOrEmpty).getOrElse(Nil)
+      val prevChunks = prevMeta.map(_.manifests).getOrElse(Nil)
       val (carried, merged) = foldChunks(prevChunks)
       val pool = merged.flatMap(manifestStore.read)
       val fresh = added.map(f => ManifestEntry(
@@ -745,17 +723,16 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         carriedSpecDdl, carried ++ newChunks, prevMeta, changeFiles, deleteFiles,
         newSchemaDdl, morDeletes, newRenames, posDeletes)
     }
-    // ---- full assembly: rewrites, replaces, metadata ops, migration ----
+    // ---- full assembly: rewrites, replaces, metadata ops ----
     val files = filesUnder(intent, prevMeta)
     val prevFiles = prevMeta.map(_.files.toSet).getOrElse(Set.empty)
-    val prevRows = prevMeta.map(_.fileRowsOrEmpty).getOrElse(Map.empty) ++ knownRows
+    val prevRows = prevMeta.map(_.fileRows).getOrElse(Map.empty) ++ knownRows
     // one footer open per ADDED file harvests rows + INT64 bounds for
     // the manifest entry (parallel, cached per handle — append's own
     // zero-row check already primed it)
     val addedStats: Map[String, (Long, Seq[ColumnBound])] =
       files.filterNot(prevFiles).par.map(f => f -> footerStats(f)).seq.toMap
-    val fileRows = files.par.map(f => f -> prevRows.getOrElse(f,
-      addedStats.get(f).map(_._1).getOrElse(footerStats(f)._1))).seq.toMap
+    val fileRows = files.map(f => f -> prevRows.getOrElse(f, addedStats(f)._1)).toMap
     // partition-spec bookkeeping: the carried spec, plus (once the table
     // has ever evolved) per-file write-spec provenance. New files were
     // written under the spec in effect BEFORE this commit (an evolve
@@ -787,7 +764,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // commit's own chunk write with their (immutable) bounds kept.
     // Spec restamps (first partition evolution, rollback overrides)
     // and removals are what break the carry.
-    val (carriedOk, toSpill) = prevMeta.map(_.manifestsOrEmpty).getOrElse(Nil)
+    val (carriedOk, toSpill) = prevMeta.map(_.manifests).getOrElse(Nil)
       .partition(n => manifestStore.read(n).forall(e =>
         fileSet.contains(e.p) && e.r == fileRows(e.p) &&
           e.specOrNone == fileSpecs.get(e.p)))
@@ -801,12 +778,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       .map(e => e.copy(r = fileRows(e.p), s = fileSpecs.get(e.p).orNull))
     val covered = carried.flatMap(n => manifestStore.read(n).map(_.p)).toSet ++
       pool.map(_.p)
-    // files never chunked yet: this commit's additions (bounds from the
-    // footer harvest) and any carried-over entries of a PRE-manifest
-    // predecessor json (one-time migration; bounds unknown → null)
+    // files never chunked yet are exactly this commit's additions
+    // (bounds from the footer harvest)
     val fresh = files.filterNot(covered).map(f => ManifestEntry(
-      f, fileRows(f), fileSpecs.get(f).orNull,
-      addedStats.get(f).map(_._2).orNull))
+      f, fileRows(f), fileSpecs.get(f).orNull, addedStats(f)._2))
     val newChunks = (pool ++ fresh).grouped(ChunkTargetEntries).map(
       manifestStore.write).toSeq
     finishCommit(op, newVersion, fileRows.values.sum, files, fileRows, fileSpecs,
@@ -830,7 +805,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // every commit carries the full per-sink batch watermark forward, so
     // the LATEST commit is always authoritative and expiring old
     // snapshots never loses a sink's mark
-    val prev = prevMeta.map(_.sinkBatchesOrEmpty).getOrElse(Map.empty)
+    val prev = prevMeta.map(_.sinkBatches).getOrElse(Map.empty)
     // the current schema rides every commit the same way (see CommitMeta)
     val carriedSchema =
       newSchemaDdl.orElse(prevMeta.flatMap(_.schemaDdlOrNone)).orNull
@@ -839,14 +814,14 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // handed the ATTEMPT's version, so a retried tombstone re-sequences
     // above the interleaved commits it lost the race to
     val carriedMorDeletes =
-      morDeletes(prevMeta.map(_.morDeleteFilesOrEmpty).getOrElse(Map.empty), newVersion)
+      morDeletes(prevMeta.map(_.morDeleteFiles).getOrElse(Map.empty), newVersion)
     // the rename log carries forward like the schema; a rename commit
     // appends its entry, rollback restores the target's log
     val carriedRenames =
-      newRenames.getOrElse(prevMeta.map(_.renamesOrEmpty).getOrElse(Nil))
+      newRenames.getOrElse(prevMeta.map(_.renames).getOrElse(Nil))
     // pending position-delete tombstones carry like equality tombstones
     val carriedPosDeletes =
-      posDeletes(prevMeta.map(_.posDeleteFilesOrEmpty).getOrElse(Map.empty), newVersion)
+      posDeletes(prevMeta.map(_.posDeleteFiles).getOrElse(Map.empty), newVersion)
     val meta = CommitMeta(newVersion, System.currentTimeMillis(), op,
       rowCount, files, prev ++ pendingSinkMark.get(), fileRows, changeFiles,
       deleteFiles, carriedSchema, carriedMorDeletes, carriedSpecDdl, fileSpecs,
@@ -1077,7 +1052,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       case None => cs.lastOption.getOrElse(CommitMeta(0, 0L, "empty", 0L, Nil))
     }
     // a raw physical read would resurface position-deleted rows
-    require(snap.posDeleteFilesOrEmpty.isEmpty,
+    require(snap.posDeleteFiles.isEmpty,
       s"${defn.name}: physical read with pending position deletes — " +
         "use readLogical(), or compact() to materialize them")
     // a PHYSICAL read exposes one set of p_* columns, so it can only
@@ -1137,7 +1112,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     if (!defn.mergeOnRead) {
       // pending position deletes (this SNAPSHOT's — time travel to a
       // pre-delete version sees the rows) anti-join away per (file, pos)
-      snap.posDeleteFilesOrEmpty.keys.toSeq.sorted match {
+      snap.posDeleteFiles.keys.toSeq.sorted match {
         case Nil => readFilesLogicalSpecAware(snap.files, logical, Some(snap))
         case ps => applyPosDeletes(
           readFilesLogicalSpecAware(snap.files, logical, Some(snap), withPos = true), ps)
@@ -1146,7 +1121,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     } else {
       val firstSeen = firstSeenByFile(cs)
       val groups = snap.files.groupBy(firstSeen).toSeq.sortBy(_._1)
-      val tombs = snap.morDeleteFilesOrEmpty
+      val tombs = snap.morDeleteFiles
       if (groups.size <= 1 && tombs.isEmpty)
         readFilesLogicalSpecAware(snap.files, logical, Some(snap))
       else {
@@ -1291,7 +1266,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       newSchemaDdl = Some(next.toDDL),
       newRenames =
         if (proneEntries.isEmpty) None
-        else Some(cs.lastOption.map(_.renamesOrEmpty).getOrElse(Nil) ++ proneEntries))
+        else Some(cs.lastOption.map(_.renames).getOrElse(Nil) ++ proneEntries))
   }
 
   /** Iceberg-style DROP COLUMN: metadata-only — the column's values stay
@@ -1332,7 +1307,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     writeCommit("evolve-schema", MetadataOnly(None),
       cs.lastOption.map(_.version).getOrElse(0),
       newSchemaDdl = Some(next.toDDL),
-      newRenames = Some(cs.lastOption.map(_.renamesOrEmpty).getOrElse(Nil) ++ dropEntries))
+      newRenames = Some(cs.lastOption.map(_.renames).getOrElse(Nil) ++ dropEntries))
   }
 
   /** Iceberg-style RENAME COLUMN: a METADATA-ONLY commit (zero data
@@ -1370,7 +1345,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     writeCommit("evolve-schema", MetadataOnly(None),
       prev.map(_.version).getOrElse(0),
       newSchemaDdl = Some(next.toDDL),
-      newRenames = Some(prev.map(_.renamesOrEmpty).getOrElse(Nil) :+
+      newRenames = Some(prev.map(_.renames).getOrElse(Nil) :+
         s"${prev.map(_.version).getOrElse(0) + 1}|$exact|$newName"))
   }
 
@@ -1424,12 +1399,12 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     writeCommit("rollback", MetadataOnly(Some(target.files)),
       cs.lastOption.map(_.version).getOrElse(0),
       newSchemaDdl = Some(target.schemaDdlOrNone.getOrElse(defn.schema.toDDL)),
-      morDeletes = (_, _) => target.morDeleteFilesOrEmpty,
+      morDeletes = (_, _) => target.morDeleteFiles,
       newPartSpecDdl = Some(target.partSpecDdlOrNone
         .getOrElse(PartitionTransform.specDdl(defn.partitions))),
-      fileSpecsOverride = Some(target.fileSpecsOrEmpty),
-      newRenames = Some(target.renamesOrEmpty),
-      posDeletes = (_, _) => target.posDeleteFilesOrEmpty)
+      fileSpecsOverride = Some(target.fileSpecs),
+      newRenames = Some(target.renames),
+      posDeletes = (_, _) => target.posDeleteFiles)
   }
 
   /** Iceberg's `TIMESTAMP AS OF`: the snapshot that was current at
@@ -1484,10 +1459,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
       writeCommit("upsert-mor", AddFiles(added), baseV)
     } else if (!trackChanges) {
       // opt-out: one merged write, NO changeFiles — the commit's change
-      // set is unknowable and readChanges refuses it (same contract as
-      // pre-upgrade upsert jsons). Measured worth: the split write
-      // reads ~1.34× on the s5 bench row — a table nobody tails is
-      // entitled to skip that premium.
+      // set is unknowable and readChanges refuses it. Measured worth:
+      // the split write reads ~1.34× on the s5 bench row — a table
+      // nobody tails is entitled to skip that premium.
       val cur = readLogical().alias("cur")
       val bb = b.alias("b")
       val sameKey = defn.keys
@@ -1590,7 +1564,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * materializes the deletes (mirroring the MOR-sequence refusals).
     */
   private def posPending: Boolean =
-    commits.lastOption.exists(_.posDeleteFilesOrEmpty.nonEmpty)
+    commits.lastOption.exists(_.posDeleteFiles.nonEmpty)
 
   /** S5c — predicate DELETE, Iceberg v2's position-delete shape (`DELETE
     * FROM ... WHERE <any predicate>`): scans the VISIBLE state with file
@@ -1634,7 +1608,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     val (_, overlapping) = classifyLiveFiles(prune)
     val base = readFilesLogicalSpecAware(overlapping, logical, Some(snap),
       withPos = true)
-    val visible = snap.posDeleteFilesOrEmpty.keys.toSeq.sorted match {
+    val visible = snap.posDeleteFiles.keys.toSeq.sorted match {
       case Nil => base
       case ps => applyPosDeletes(base, ps)
     }
@@ -1790,8 +1764,6 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         // Manifests store bounds under the WRITE-TIME column name, so a
         // renamed pruning column is probed under each file's stored name
         // (a miss there degrades to rewrite, never to a wrong carry).
-        // Only files migrated from pre-manifest commits (no recorded
-        // bounds at all) fall back to a parallel footer probe.
         val stored = storedColumnByFile(p.column)
         val bounds = boundsByFile(commits.lastOption, live, stored)
         if (bounds.exists(_._2.isEmpty)) (Nil, live)
@@ -1805,28 +1777,25 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
-  /** Per-file bounds of a (possibly renamed) column over `files`:
-    * manifest entries first — a key present is the written bounds, a
-    * key absent from a RECORDED bounds map means the stats were
-    * unusable at write time (same verdict a footer probe would reach,
-    * without the IO) — and a parquet footer probe only for files whose
-    * entry predates bounds recording entirely.
+  /** Per-file bounds of a (possibly renamed) column over `files`, from
+    * the snapshot's manifest entries: a key present is the written
+    * bounds; a key absent means the stats were unusable at write time
+    * (None — callers treat the file as "may contain anything").
     */
   private def boundsByFile(snap: Option[CommitMeta], files: Seq[String],
       stored: String => String): Seq[(String, Option[(Long, Long)])] = {
     val persisted = snap.map(manifestBoundsOf).getOrElse(Map.empty)
-    val rows = snap.map(_.fileRowsOrEmpty).getOrElse(Map.empty)
-    files.par.map { f =>
+    val rows = snap.map(_.fileRows).getOrElse(Map.empty)
+    files.map { f =>
       f -> (persisted.get(f) match {
         // a zero-row file (Spark's schema-only artifact) has no blocks
         // and so no recorded columns — its bounds are the empty range
-        // for EVERY column, same as a footer probe would conclude
+        // for EVERY column
         case Some(_) if rows.getOrElse(f, -1L) == 0L =>
           Some((Long.MaxValue, Long.MinValue))
-        case Some(bm) => bm.get(stored(f))
-        case None => fileBoundsMicros(f, stored(f))
+        case bm => bm.flatMap(_.get(stored(f)))
       })
-    }.seq
+    }
   }
 
   /** file → the name the file's FOOTER stores for the current logical
@@ -1845,46 +1814,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     }
   }
 
-  /** Footer min/max of an INT64 column (µs for TIMESTAMP) across a
-    * file's row groups. None ⇒ stats unusable (column missing — e.g. a
-    * partition column not stored in the data file — or not INT64, or
-    * not recorded); callers must treat None as "may contain anything".
-    * A file whose every value is null gets the empty range
-    * (MaxValue, MinValue), which intersects nothing.
-    */
-  private def fileBoundsMicros(file: String, colName: String): Option[(Long, Long)] = {
-    GraftTable.footerProbeCount.incrementAndGet() // test pin: the pruned
-    // path on manifest-format tables must never reach this fallback
-    val conf = spark.sessionState.newHadoopConf()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(s"$dataDir/$file"), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
-      var usable = true
-      r.getFooter.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == colName) match {
-          case Some(c) =>
-            val s = c.getStatistics
-            if (s == null) usable = false
-            else if (s.hasNonNullValue) (s.genericGetMin, s.genericGetMax) match {
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                lo = math.min(lo, mn)
-                hi = math.max(hi, mx)
-              case _ => usable = false
-            }
-            else if (!(s.isNumNullsSet && s.getNumNulls == b.getRowCount)) usable = false
-          case None => usable = false
-        }
-      }
-      if (usable) Some((lo, hi)) else None
-    } finally r.close()
-  }
-
-  /** Footer max of an INT64/timestamp column over the live snapshot — a
-    * metadata-only watermark read. None ⇒ stats unusable on some file or
-    * no non-null value anywhere; callers fall back to a data scan.
+  /** Max of an INT64/timestamp column over the live snapshot, from the
+    * manifest bounds — a metadata-only watermark read. None ⇒ stats
+    * unusable on some file or no non-null value anywhere; callers fall
+    * back to a data scan.
     */
   def columnMaxMicros(colName: String): Option[Long] = {
     val live = commits.lastOption.map(_.files).getOrElse(Nil)
@@ -1942,7 +1875,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * refuse this too (compact() clears both).
     */
   private def morPending: Boolean =
-    commits.lastOption.exists(_.morDeleteFilesOrEmpty.nonEmpty)
+    commits.lastOption.exists(_.morDeleteFiles.nonEmpty)
 
   /** Raw read of specific data files, projected to the logical columns —
     * the incremental-scan primitive: the materializer reads ONLY the
@@ -2060,11 +1993,10 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * ([[classifyLiveFiles]]) and watermark reads ([[columnMaxMicros]])
     * later resolve from the metadata log with ZERO data-file footer
     * IO (Iceberg records the same bounds in its manifests from write
-    * metrics). Per-column semantics mirror [[fileBoundsMicros]]: an
-    * all-null column records the empty range (MaxValue, MinValue);
-    * unusable stats (missing, non-INT64, null-count unknown) omit the
-    * column. Cached per handle so append's zero-row check and
-    * writeCommit share a single open.
+    * metrics). An all-null column records the empty range
+    * (MaxValue, MinValue); unusable stats (missing, non-INT64,
+    * null-count unknown) omit the column. Cached per handle so append's
+    * zero-row check and writeCommit share a single open.
     */
   private def footerStats(file: String): (Long, Seq[ColumnBound]) =
     footerStatsCache.getOrElseUpdate(file, {
@@ -2137,7 +2069,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * foreachBatch sink must deduplicate on it (the Structured Streaming
     * contract). Authoritative source is the latest commit's embedded
     * `sinkBatches`; the side file only covers batches that committed no
-    * data (and pre-upgrade tables).
+    * data.
     */
   private def streamState: Map[String, Long] = {
     val p = Paths.get(s"$commitsDir/stream-state.json")
@@ -2148,7 +2080,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
 
   def lastCommittedBatch(sinkId: String): Long = {
     val inCommit = commits.lastOption
-      .flatMap(_.sinkBatchesOrEmpty.get(sinkId)).getOrElse(-1L)
+      .flatMap(_.sinkBatches.get(sinkId)).getOrElse(-1L)
     math.max(inCommit, streamState.getOrElse(sinkId, -1L))
   }
 
@@ -2251,7 +2183,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // files referenced by pending position deletes must rewrite (with
     // the tombstones applied) — an unreferenced file still carries by
     // name, so a small predicate delete compacts O(touched files)
-    val pendingPos = snap.map(_.posDeleteFilesOrEmpty.keys.toSeq.sorted).getOrElse(Nil)
+    val pendingPos = snap.map(_.posDeleteFiles.keys.toSeq.sorted).getOrElse(Nil)
     val posRefs: Set[String] =
       if (pendingPos.isEmpty) Set.empty
       else posPairs(pendingPos).select("__file").distinct()
@@ -2617,8 +2549,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // live BRANCH snapshots reference files main doesn't know yet —
     // those are the branch's staged payload, not orphans
     def refsOf(c: CommitMeta): Seq[String] =
-      c.files ++ c.deleteFilesOrEmpty ++ c.morDeleteFilesOrEmpty.keys ++
-        c.posDeleteFilesOrEmpty.keys
+      c.files ++ c.deleteFiles ++ c.morDeleteFiles.keys ++
+        c.posDeleteFiles.keys
     val branchViews = branches.map(branchView)
     val branchRefs = branchViews.flatMap(_.commits.flatMap(refsOf)).toSet
     val referenced = commits.flatMap(refsOf).toSet ++ branchRefs
@@ -2631,7 +2563,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     // Same age gate: a racing writer's fresh chunks are unreferenced
     // until its publish lands
     manifestStore.sweep(
-      (commits ++ branchViews.flatMap(_.commits)).flatMap(_.manifestsOrEmpty).toSet,
+      (commits ++ branchViews.flatMap(_.commits)).flatMap(_.manifests).toSet,
       minAgeMs)
     // staging remnants: under concurrent writers a fresh staging dir
     // may be an IN-FLIGHT write racing this maintenance pass — only
@@ -2792,7 +2724,8 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * rewrites (`compact`, `zorder`) change nothing logical and
     * contribute an empty delta. Everything else refuses: a blind
     * rewrite's file delta is the merged result, not the change set,
-    * and a pre-changeFiles upsert json no longer knows its batch.
+    * and an upsert written with `trackChanges = false` never recorded
+    * its batch.
     *
     * Gap rule: every version in the range AND each one's predecessor
     * must still be in the log (the delta is files-minus-predecessor).
@@ -2827,25 +2760,25 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
         c.op match {
           case "append" | "upsert-mor" =>
             (c, c.files.filterNot(prevFiles), Nil: Seq[String])
-          case "upsert" if c.changeFilesOrEmpty.nonEmpty =>
-            (c, c.changeFilesOrEmpty, Nil: Seq[String])
+          case "upsert" if c.changeFiles.nonEmpty =>
+            (c, c.changeFiles, Nil: Seq[String])
           case "replace-cdc" =>
-            (c, c.changeFilesOrEmpty, c.deleteFilesOrEmpty)
+            (c, c.changeFiles, c.deleteFiles)
           case "delete-mor" =>
             // the tombstone file(s) THIS commit added (map delta vs the
             // predecessor's carried set); readChanges turns them into
             // full delete rows via the predecessor snapshot
             val prevTombs = byVersion.get(c.version - 1)
-              .map(_.morDeleteFilesOrEmpty.keySet).getOrElse(Set.empty[String])
+              .map(_.morDeleteFiles.keySet).getOrElse(Set.empty[String])
             (c, Nil: Seq[String],
-              (c.morDeleteFilesOrEmpty.keySet -- prevTombs).toSeq.sorted)
+              (c.morDeleteFiles.keySet -- prevTombs).toSeq.sorted)
           case "delete-pos" =>
             // same shape for position deletes: the pos-tombstone file(s)
             // this commit added; readChanges reads the referenced rows
             val prevPos = byVersion.get(c.version - 1)
-              .map(_.posDeleteFilesOrEmpty.keySet).getOrElse(Set.empty[String])
+              .map(_.posDeleteFiles.keySet).getOrElse(Set.empty[String])
             (c, Nil: Seq[String],
-              (c.posDeleteFilesOrEmpty.keySet -- prevPos).toSeq.sorted)
+              (c.posDeleteFiles.keySet -- prevPos).toSeq.sorted)
           case "compact" | "zorder" | "evolve-schema" | "evolve-partition" =>
             // layout-/metadata-only: no logical rows changed
             (c, Nil: Seq[String], Nil: Seq[String])
@@ -2876,7 +2809,7 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     * the source aggregate without touching a data file).
     */
   def manifestEntries: Seq[(String, ManifestEntry)] =
-    commits.lastOption.map(_.manifestsOrEmpty).getOrElse(Nil)
+    commits.lastOption.map(_.manifests).getOrElse(Nil)
       .flatMap(n => manifestStore.read(n).map(n -> _))
 
   /** Per-chunk stats of the current snapshot, Iceberg-`$manifests`
@@ -2892,9 +2825,9 @@ final class GraftTable(val spark: SparkSession, val defn: TableDef, root: String
     */
   def manifestInfo: Seq[(String, Long, Int, Int, Long)] = {
     val cs = commits
-    cs.lastOption.map(_.manifestsOrEmpty).getOrElse(Nil).map { n =>
+    cs.lastOption.map(_.manifests).getOrElse(Nil).map { n =>
       val entries = manifestStore.read(n)
-      val addedAt = cs.find(_.manifestsOrEmpty.contains(n)).map(_.version).getOrElse(0)
+      val addedAt = cs.find(_.manifests.contains(n)).map(_.version).getOrElse(0)
       (n, manifestStore.sizeBytes(n), addedAt, entries.size, entries.map(_.r).sum)
     }
   }
@@ -2930,14 +2863,6 @@ object GraftTable {
     * shuffled anti-join (and compaction should have run long before).
     */
   val PosDeleteBroadcastBytes: Long = 32L * 1024 * 1024
-
-  /** Count of per-file parquet-footer bound probes ([[fileBoundsMicros]]
-    * calls) — the metadata-IO the manifest bounds exist to eliminate.
-    * Tests pin that pruned reads and watermark lookups on
-    * manifest-format tables leave this untouched; only files migrated
-    * from pre-manifest commit jsons may pay the fallback.
-    */
-  val footerProbeCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Per-session depth of in-flight graft writes, guarding the
     * `spark.sql.parquet.outputTimestampType = TIMESTAMP_MICROS` scope

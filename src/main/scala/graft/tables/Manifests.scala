@@ -21,14 +21,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *    log without ever re-opening data-file footers. A column all-null
   *    in the file records the empty range `(Long.MaxValue,
   *    Long.MinValue)` (intersects nothing); a column with unusable
-  *    stats is simply absent. `b = null` marks an entry migrated from
-  *    a pre-manifest commit json (bounds unknown — readers fall back
-  *    to a footer probe for those files only).
+  *    stats is simply absent. Always present.
   */
-final case class ManifestEntry(p: String, r: Long, s: String = null,
-    b: Seq[ColumnBound] = null) {
+final case class ManifestEntry(p: String, r: Long, s: String,
+    b: Seq[ColumnBound]) {
   def specOrNone: Option[String] = Option(s)
-  def boundsOrNone: Option[Seq[ColumnBound]] = Option(b)
 }
 
 /** One column's `[lo, hi]` inside a manifest entry. A dedicated case

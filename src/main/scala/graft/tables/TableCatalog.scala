@@ -49,8 +49,8 @@ final class TableCatalog(spark: SparkSession, val root: String, defs: Seq[TableD
     val lm = live.fields.map(f => f.name -> f).toMap
     // a declared column absent from live files is ADDITIVE evolution,
     // not drift: reads null-fill it (Iceberg's add-optional-column is
-    // the same compatible change — e.g. the watermark table gaining
-    // source_version must not brick pre-upgrade warehouses)
+    // the same compatible change — a declared column added after a
+    // table's first files were written reads null in those files)
     val extra = live.fieldNames.filterNot(c => dm.contains(c) || everDeclared.contains(c))
       .map(c => s"live column '$c' not declared")
     val typeDrift = declared.fields.flatMap { f =>

@@ -49,7 +49,7 @@ class TablesSpec extends AnyFunSuite {
     val p = Paths.get(s"$root/cck/_commits/commit-1.json")
     def plant(rowCount: Int): Unit = {
       Files.writeString(p,
-        s"""{"version":1,"tsMs":0,"op":"append","rowCount":$rowCount,"files":[]}""")
+        s"""{"version":1,"tsMs":0,"op":"append","rowCount":$rowCount,"files":[],"manifests":[]}""")
       p.toFile.setLastModified(1700000000000L) // pin mtime across rewrites
     }
     plant(5)
